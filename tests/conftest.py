@@ -24,3 +24,25 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def documents(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+# Budgets that force each bm25_search_pruned placement: every request fits
+# the driver-side task, or none does.
+PLACEMENT_BUDGETS = {"driver": 1 << 62, "distributed": -1}
+
+
+@pytest.fixture
+def each_placement(monkeypatch):
+    """``run(fn)`` calls ``fn`` once per search placement, selected by
+    patching the budget the placement rule reads, and returns
+    ``{placement: fn()}``."""
+    import rustserini_spark.operators.search as search
+
+    def run(fn):
+        out = {}
+        for name, budget in PLACEMENT_BUDGETS.items():
+            monkeypatch.setattr(search, "DECODE_CACHE_MAX_POSTINGS", budget)
+            out[name] = fn()
+        return out
+
+    return run

@@ -83,14 +83,8 @@ def test_exhaustive_matches_oracle(tiny_index, queries_df):
     _assert_parity(_collect(bm25_search(tiny_index, queries_df, k=10)))
 
 
-def test_pruned_matches_oracle(tiny_index, queries_df):
-    _assert_parity(_collect(bm25_search_pruned(tiny_index, queries_df, k=10)))
-
-
-def test_pruned_equals_exhaustive_small_k(tiny_index, queries_df):
-    a = _collect(bm25_search(tiny_index, queries_df, k=2))
-    b = _collect(bm25_search_pruned(tiny_index, queries_df, k=2))
-    # identical rankings; scores may differ in the last ulp (summation order)
+def _assert_same_ranking(a, b):
+    """Rank-identical; scores may differ in the last ulp (summation order)."""
     assert {q: [(r, d) for r, d, _ in v] for q, v in a.items()} == {
         q: [(r, d) for r, d, _ in v] for q, v in b.items()
     }
@@ -99,58 +93,138 @@ def test_pruned_equals_exhaustive_small_k(tiny_index, queries_df):
             assert sa == pytest.approx(sb, abs=1e-9)
 
 
-def test_list_queries_match_dataframe_queries(tiny_index, queries_df):
+def test_pruned_matches_oracle(tiny_index, queries_df, each_placement):
+    got = each_placement(lambda: _collect(bm25_search_pruned(tiny_index, queries_df, k=10)))
+    for placement in got.values():
+        _assert_parity(placement)
+    _assert_same_ranking(got["driver"], got["distributed"])
+
+
+def test_pruned_equals_exhaustive_small_k(tiny_index, queries_df, each_placement):
+    a = _collect(bm25_search(tiny_index, queries_df, k=2))
+    got = each_placement(lambda: _collect(bm25_search_pruned(tiny_index, queries_df, k=2)))
+    for b in got.values():
+        _assert_same_ranking(a, b)
+
+
+def test_degenerate_requests_return_empty(tiny_index, each_placement):
+    """A request of only out-of-vocabulary or only empty queries returns an
+    empty, well-typed result under either placement."""
+    for request in (
+        [("q3", "zzzunknownterm")],
+        [("q4", "")],
+        [("q3", "zzzunknownterm"), ("q4", ""), ("q7", "the of")],
+    ):
+        got = each_placement(lambda: bm25_search_pruned(tiny_index, request, k=10))
+        for res in got.values():
+            assert res.collect() == []
+            assert res.schema.fieldNames() == ["qid", "doc_id", "score", "rank"]
+
+
+def test_pruned_on_loaded_index_both_placements(spark, tmp_path, each_placement):
+    """load_index reads a durable index whose blocks shuffle to shard groups
+    on the distributed placement; both placements match the oracle."""
+    from rustserini_spark.operators.index_build import build_index_checkpointed, load_index
+
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(TINY_CORPUS), "text": list(TINY_CORPUS.values())})
+    )
+    build_index_checkpointed(
+        spark, docs, str(tmp_path), input_id="tiny", block_size=4, seg_docs=3, n_shards=4
+    )
+    index = load_index(spark, str(tmp_path))
+    got = each_placement(lambda: _collect(bm25_search_pruned(index, list(QUERIES), k=10)))
+    for placement in got.values():
+        _assert_parity(placement)
+
+
+def test_quoted_and_non_ascii_terms_both_placements(spark, each_placement):
+    """Query terms with internal apostrophes and non-ASCII letters reach the
+    postings filter intact on both placements."""
+    corpus = {
+        0: "O'Neil met the straße crew in Köln",
+        1: "the crew of o'neil",
+        2: "Straße and Köln and naïve café",
+        3: "nothing to see",
+    }
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(corpus), "text": list(corpus.values())})
+    )
+    index = build_index(spark, docs, block_size=4, seg_docs=2, n_shards=2)
+    queries = [("a", "o'neil straße"), ("b", "köln café naïve"), ("c", "crew")]
+    for placement, got in each_placement(
+        lambda: _collect(bm25_search_pruned(index, queries, k=10))
+    ).items():
+        for qid, query in queries:
+            expected = bm25_rank(corpus, query, k=10)
+            actual = got.get(qid, [])
+            assert [a[1] for a in actual] == [e[0] for e in expected], (placement, qid)
+            np.testing.assert_allclose([a[2] for a in actual], [e[1] for e in expected], atol=1e-9)
+
+
+def test_list_queries_match_dataframe_queries(tiny_index, queries_df, each_placement):
     """The reference's batch_search takes raw query strings (Vec<String>) —
     the list fast path must produce identical results to the DataFrame path
     (and skips a createDataFrame->collect round trip per batch)."""
-    _assert_parity(_collect(bm25_search_pruned(tiny_index, list(QUERIES), k=10)))
+    got = each_placement(lambda: _collect(bm25_search_pruned(tiny_index, list(QUERIES), k=10)))
+    for placement in got.values():
+        _assert_parity(placement)
     _assert_parity(_collect(bm25_search(tiny_index, list(QUERIES), k=10)))
 
 
-def test_idf_cache_preloaded_no_per_batch_dictionary_job(tiny_index):
-    """materialize() preloads the driver idf map; a pruned batch must then
-    resolve idf without ANY dictionary scan (round 3's measured ~2.5s fixed
-    per-batch floor was exactly this per-batch .collect())."""
+def test_idf_cache_preloaded_no_per_batch_dictionary_job(tiny_index, each_placement):
+    """materialize() preloads the driver (idf, df) map; a pruned batch must
+    then resolve idf and place itself without ANY dictionary scan (round 3's
+    measured ~2.5s fixed per-batch floor was exactly this per-batch
+    .collect())."""
     tiny_index.materialize()
-    assert tiny_index.idf_cache is not None and "manhattan" in tiny_index.idf_cache
+    assert tiny_index.idf_cache is not None
+    assert tiny_index.idf_cache["manhattan"] == (pytest.approx(expected_idf(3, 7), abs=1e-12), 3)
     # poison the dictionary DataFrame: any per-batch access would now blow up
     saved = tiny_index.dictionary
     try:
         tiny_index.dictionary = None
-        got = _collect(bm25_search_pruned(tiny_index, list(QUERIES), k=10))
+        got = each_placement(lambda: _collect(bm25_search_pruned(tiny_index, list(QUERIES), k=10)))
     finally:
         tiny_index.dictionary = saved
-    _assert_parity(got)
+    for placement in got.values():
+        _assert_parity(placement)
 
 
-def test_idf_memo_fallback_matches_cache(tiny_index, queries_df):
+def test_idf_memo_fallback_matches_cache(tiny_index, queries_df, each_placement):
     """Vocabularies above MAX_IDF_CACHE_TERMS fall back to memoized filtered
     lookups — same answers, and the memo converges (2nd call = zero lookups)."""
     import rustserini_spark.operators.index_build as ib
 
     saved_cache, saved_memo = tiny_index.idf_cache, dict(tiny_index._idf_memo)
-    try:
-        tiny_index.idf_cache = None
+
+    def first_and_second_call():
         tiny_index._idf_memo.clear()
         _assert_parity(_collect(bm25_search_pruned(tiny_index, list(QUERIES), k=10)))
         memo_after_first = dict(tiny_index._idf_memo)
         assert memo_after_first.get("zzzunknownterm", "absent") is None  # OOV negative-cached
+        assert memo_after_first["manhattan"][1] == 3  # df rides the same lookup
         _assert_parity(_collect(bm25_search_pruned(tiny_index, list(QUERIES), k=10)))
         assert tiny_index._idf_memo == memo_after_first
+
+    try:
+        tiny_index.idf_cache = None
+        each_placement(first_and_second_call)
     finally:
         tiny_index.idf_cache, tiny_index._idf_memo = saved_cache, saved_memo
     assert ib.MAX_IDF_CACHE_TERMS >= 1_000_000  # web-vocab guard stays in place
 
 
-def test_canonical_query_top1(tiny_index, queries_df):
+def test_canonical_query_top1(tiny_index, queries_df, each_placement):
     # reference parity style: top-1 docid for the canonical Manhattan-Project
     # query is doc 0 (/root/reference/tests/searcher_test.rs:99)
-    got = _collect(bm25_search_pruned(tiny_index, queries_df, k=10))
-    assert got["q0"][0][1] == 0
+    got = each_placement(lambda: _collect(bm25_search_pruned(tiny_index, queries_df, k=10)))
+    for placement in got.values():
+        assert placement["q0"][0][1] == 0
 
 
 @pytest.mark.parametrize("n_shards", [8, 128])
-def test_n_shards_is_a_build_parameter(spark, documents, n_shards):
+def test_n_shards_is_a_build_parameter(spark, documents, n_shards, each_placement):
     """Doc-shard count plumbs through the build (reference behavior target:
     batch_search thread fan-out, /root/reference/src/searcher/lucene/
     searcher.rs:101-154): results identical at any shard count, shards
@@ -170,14 +244,15 @@ def test_n_shards_is_a_build_parameter(spark, documents, n_shards):
     # must spread them (the round-1 modulo bug collapsed all onto shard 0)
     assert len(shards_used) >= min(n_shards, 32) // 2
     corpus = {r.doc_id: r.text for r in documents.collect()}
-    got = _collect(bm25_search_pruned(index, qdf, k=10))
-    for qid, query in queries:
-        expected = bm25_rank(corpus, query, k=10)
-        assert [a[1] for a in got.get(qid, [])] == [e[0] for e in expected], qid
+    results = each_placement(lambda: _collect(bm25_search_pruned(index, qdf, k=10)))
+    for placement, got in results.items():
+        for qid, query in queries:
+            expected = bm25_rank(corpus, query, k=10)
+            assert [a[1] for a in got.get(qid, [])] == [e[0] for e in expected], (placement, qid)
 
 
 @pytest.mark.parametrize("pruned", [False, True])
-def test_parity_on_documents_table(spark, documents, pruned):
+def test_parity_on_documents_table(spark, documents, pruned, each_placement):
     """500-doc driver corpus, multi-term queries sampling head/mid/tail terms."""
     corpus = {r.doc_id: r.text for r in documents.collect()}
     queries = [
@@ -188,15 +263,18 @@ def test_parity_on_documents_table(spark, documents, pruned):
     ]
     qdf = spark.createDataFrame(pd.DataFrame(queries, columns=["qid", "query"]))
     index = build_index(spark, documents, block_size=32, seg_docs=64, n_shards=8)
-    fn = bm25_search_pruned if pruned else bm25_search
-    got = _collect(fn(index, qdf, k=10))
-    for qid, query in queries:
-        expected = bm25_rank(corpus, query, k=10)
-        actual = got.get(qid, [])
-        assert [a[1] for a in actual] == [e[0] for e in expected], qid
-        np.testing.assert_allclose(
-            [a[2] for a in actual], [e[1] for e in expected], atol=1e-9
-        )
+    if pruned:
+        results = each_placement(lambda: _collect(bm25_search_pruned(index, qdf, k=10)))
+    else:
+        results = {"exhaustive": _collect(bm25_search(index, qdf, k=10))}
+    for placement, got in results.items():
+        for qid, query in queries:
+            expected = bm25_rank(corpus, query, k=10)
+            actual = got.get(qid, [])
+            assert [a[1] for a in actual] == [e[0] for e in expected], (placement, qid)
+            np.testing.assert_allclose(
+                [a[2] for a in actual], [e[1] for e in expected], atol=1e-9
+            )
 
 
 def test_maxscore_head_term_decode_bound():
@@ -254,7 +332,7 @@ def test_maxscore_head_term_decode_bound():
     )
 
 
-def test_adaptive_cut_survives_boundary_rounded_ties(spark):
+def test_adaptive_cut_survives_boundary_rounded_ties(spark, each_placement):
     """Property test for the adaptive candidate cut (round-4 ADVICE #5):
     60 docs whose raw BM25 scores differ only in the 8th decimal (one query
     term, tf=1, document lengths ~10k differing by one token) all round-tie
@@ -275,11 +353,13 @@ def test_adaptive_cut_survives_boundary_rounded_ties(spark):
     index = build_index(spark, docs, analyzer="simple")
     qdf = spark.createDataFrame(pd.DataFrame([("q0", "manhattan")], columns=["qid", "query"]))
 
-    # precondition: the naive fixed-cut answer is actually wrong on this corpus
-    naive = bm25_search_pruned(index, qdf, k=50)
-    assert min(r.doc_id for r in naive.collect()) == 10
+    def adaptive():
+        # precondition: the naive fixed-cut answer is actually wrong on this corpus
+        naive = bm25_search_pruned(index, qdf, k=50)
+        assert min(r.doc_id for r in naive.collect()) == 10
 
-    got = e._rerank_rounded_adaptive(lambda cut: bm25_search_pruned(index, qdf, k=cut), 10)
-    assert sorted((r.rank, r.doc_id) for r in got.collect()) == [
-        (k, k - 1) for k in range(1, 11)
-    ]
+        got = e._rerank_rounded_adaptive(lambda cut: bm25_search_pruned(index, qdf, k=cut), 10)
+        return sorted((r.rank, r.doc_id) for r in got.collect())
+
+    for got in each_placement(adaptive).values():
+        assert got == [(k, k - 1) for k in range(1, 11)]

@@ -94,14 +94,25 @@ def test_build_dictionary_aggregates_block_metadata_only(spark, documents):
     assert "Join" not in plan, plan[:1200]
 
 
-def test_pruned_search_has_zero_block_shuffle_on_materialized_index(spark, documents):
+@pytest.fixture(scope="module")
+def materialized_index(spark, documents):
+    from rustserini_spark.operators.index_build import build_index
+
+    return build_index(spark, documents.select("doc_id", "text")).materialize()
+
+
+def test_pruned_search_has_zero_block_shuffle_on_materialized_index(
+    spark, materialized_index, monkeypatch
+):
     """On a materialized (shard-partitioned-cache) index, a query batch's plan
     must reuse the cached partitioning: the ONLY exchange is the tiny final
-    top-k window on qid — posting blocks never move."""
-    from rustserini_spark.operators.index_build import build_index
+    top-k window on qid — posting blocks never move. The budget is patched
+    to 0 so this one-query request takes the distributed placement."""
+    import rustserini_spark.operators.search as search
     from rustserini_spark.operators.search import bm25_search_pruned
 
-    index = build_index(spark, documents.select("doc_id", "text")).materialize()
+    monkeypatch.setattr(search, "DECODE_CACHE_MAX_POSTINGS", 0)
+    index = materialized_index
     qdf = spark.createDataFrame([("p", "spark query window")], "qid string, query string")
     res = bm25_search_pruned(index, qdf, k=10)
     plan = _plan(res)
@@ -113,6 +124,107 @@ def test_pruned_search_has_zero_block_shuffle_on_materialized_index(spark, docum
     scan = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l and i > grp)
     between = [l for l in lines[grp + 1 : scan] if "Exchange" in l]
     assert not between, (between, "\n".join(lines[grp:scan + 1]))
+
+
+def test_small_pruned_request_runs_one_jvm_only_job(spark, materialized_index):
+    """A request within the decode budget takes the driver placement: one
+    Spark job (the block fetch) with one stage — no Exchange — whose plan
+    has no Python-worker operator above the cached postings, and a result
+    that is a local relation (collecting it starts no further job)."""
+    from rustserini_spark.operators.search import bm25_search_pruned
+
+    sc = spark.sparkContext
+    group = "small-pruned-request"
+    sc.setJobGroup(group, group)
+    try:
+        res = bm25_search_pruned(materialized_index, [("p", "spark query window")], k=10)
+        rows = res.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 10
+    python_ops = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython")
+    result_plan = _plan(res)
+    assert "LocalTableScan" in result_plan and "Exchange" not in result_plan, result_plan
+    assert not any(op in result_plan for op in python_ops), result_plan
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    # stages that ran: the cached postings' build lineage shows up as
+    # skipped stages of the job's DAG
+    store = sc._jsc.sc().statusStore()
+    stage_ids = store.job(jobs[0]).stageIds()
+    ran = [
+        stage_ids.apply(i)
+        for i in range(stage_ids.size())
+        if store.lastStageAttempt(stage_ids.apply(i)).status().toString() != "SKIPPED"
+    ]
+    assert len(ran) == 1, ran
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        executions.apply(i).physicalPlanDescription()
+        for i in range(executions.size())
+        if executions.apply(i).jobs().contains(jobs[0])
+    ]
+    assert len(plans) == 1
+    # the cached relation's own lineage (the build's MapInPandas) is printed
+    # below InMemoryRelation but is not run: the scan reads cached blocks
+    physical = plans[0].split("== Physical Plan ==")[-1].split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in physical, physical
+    assert "Exchange" not in physical and not any(op in physical for op in python_ops), physical
+
+
+def test_isin_col_pushes_down_and_matches_isin(spark, saved_index, tmp_path):
+    """isin_col builds the same In/InSet predicate as Column.isin with O(1)
+    py4j calls: the parquet scan still lists it under PushedFilters, and it
+    keeps exactly the rows isin keeps, including values with quotes,
+    backslashes and non-ASCII letters."""
+    from rustserini_spark.session import isin_col
+
+    terms = ["spark", "queri", "window", "zzznotaterm"] + [f"t{i}" for i in range(40)]
+    plan = _plan(saved_index.postings.filter(isin_col("term", terms)))
+    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert m and "term" in m.group(1), plan[:800]
+    cols = ["term", "salt", "block_seq"]
+    got = saved_index.postings.filter(isin_col("term", terms)).select(cols)
+    want = saved_index.postings.filter(F.col("term").isin(terms)).select(cols)
+    assert sorted(got.collect()) == sorted(want.collect()) != []
+
+    odd = ["o'neil", "back\\slash", "stra\u00dfe", "\u65e5\u672c", "a'b\\c\"d", "plain", "o"]
+    path = str(tmp_path / "odd")
+    spark.createDataFrame([(t,) for t in odd], "term string").write.parquet(path)
+    table = spark.read.parquet(path)
+    wanted = odd[:5] + ["absent'"]
+    assert "PushedFilters: [In(term, [" in _plan(table.filter(isin_col("term", wanted)))
+    got = sorted(r.term for r in table.filter(isin_col("term", wanted)).collect())
+    assert got == sorted(r.term for r in table.filter(F.col("term").isin(wanted)).collect())
+    assert got == sorted(odd[:5])
+
+
+def test_filter_unpushed_stays_above_projection_and_keeps_rows(spark):
+    """filter_unpushed keeps a predicate on a column computed over a join
+    above that join, where a plain filter is pushed into the join condition
+    with the defining expression substituted; its always-false term
+    survives optimization and it keeps exactly the rows a plain filter
+    keeps."""
+    from rustserini_spark.session import filter_unpushed
+
+    a = spark.range(200).select(F.col("id").alias("k"), F.array("id", F.col("id") % 7).alias("xa"))
+    b = spark.range(200).select(F.col("id").alias("k"), F.array(F.col("id") % 5, "id").alias("xb"))
+    derived = a.join(b, "k").withColumn("n", F.size(F.array_intersect("xa", "xb")))
+    cond = F.col("n") >= 2
+
+    def join_and_filter_lines(df):
+        lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+        return [l for l in lines if "Join" in l], [l for l in lines if "Filter" in l]
+
+    joins, filters = join_and_filter_lines(filter_unpushed(derived, cond))
+    assert len(joins) == 1 and "array_intersect" not in joins[0], joins
+    assert len(filters) == 1 and "isnan(rand(0))" in filters[0], filters
+    plain_joins, _ = join_and_filter_lines(derived.filter(cond))
+    assert "array_intersect" in plain_joins[0], plain_joins  # what the pin prevents
+    got = sorted(filter_unpushed(derived, cond).select("k").collect())
+    assert got == sorted(derived.filter(cond).select("k").collect()) != []
 
 
 def test_ivf_probe_scan_prunes_cell_partitions(spark, sf_dir, tmp_path_factory):
