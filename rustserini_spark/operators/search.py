@@ -24,26 +24,8 @@ Two scoring strategies, both returning identical rankings:
   algorithm in NumPy (``_search_shard``) — blocks whose upper bound cannot
   reach the running top-k threshold are never decoded. Preferred for
   interactive k<<corpus retrieval; returns the exhaustive plan's answer
-  exactly (tested rank-identical). Where that task runs is decided per
-  request, before anything is fetched, by one number that reuses the
-  budget a shard task already has:
-
-  - Σ over queries of Σ over their distinct terms of df ≤
-    ``DECODE_CACHE_MAX_POSTINGS`` (df from the index's driver-side term
-    map): DRIVER placement. One JVM-only scan fetches the matched blocks as
-    Arrow, the kernel scores them on the driver as a single shard, and the
-    top-k comes back as a local relation — no Python worker stage, no
-    Exchange, one Spark job, and that job runs during the call (the result
-    is eager, not a lazy plan). This removes the per-Python-task floor:
-    pyspark's per-task ``setup_spark_files`` calls
-    ``importlib.invalidate_caches()``, which on Python 3.11 re-reads every
-    zip directory on ``sys.path`` (measured 0.15-0.24 s per task inside a
-    reused worker on a 4-vCPU host: 16 zipimporters), and the second job
-    of the top-k window.
-  - Larger requests: DISTRIBUTED placement. Shards score in parallel tasks
-    (the reference's batch_search threads ⇔ Spark tasks, its
-    src/searcher/lucene/searcher.rs:101-154) and a window merges the
-    per-shard top-k.
+  exactly (tested rank-identical). Small requests run on the driver, larger
+  ones distributed; the placement rule is in its docstring.
 """
 
 from __future__ import annotations
@@ -52,7 +34,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -432,15 +413,23 @@ def _search_shard(
 def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
     """Document-sharded block-max search (the distributed-IR standard).
 
-    Placement: a request whose matched postings fit one shard task's decode
-    budget — Σ over queries of Σ over their terms of df ≤
-    ``DECODE_CACHE_MAX_POSTINGS``, read from the index's driver-side term
-    map before anything is fetched — runs as ONE driver-side task: a single
-    JVM-only scan fetches its matched blocks, ``_search_shard`` scores them
-    on the driver (the whole collection is one doc-disjoint shard, so its
-    local top-k is the global one) and the result comes back as a local
-    relation. No Python worker stage, no Exchange, no second job; the fetch
-    runs during this call, so such a result is eager.
+    Placement: a request whose matched postings fit one task slot's share
+    of a shard task's decode budget — Σ over queries of Σ over their terms
+    of df, times the session's ``defaultParallelism``, ≤
+    ``DECODE_CACHE_MAX_POSTINGS``, with df read from the index's driver-side
+    term map before anything is fetched — runs as ONE driver-side task: a
+    single JVM-only scan fetches its matched blocks, ``_search_shard``
+    scores them on the driver (the whole collection is one doc-disjoint
+    shard, so its local top-k is the global one) and the result comes back
+    as a local relation. No Python worker stage, no Exchange, no second job;
+    the fetch runs during this call, so such a result is eager. This skips
+    the fixed cost of a Python task (pyspark's per-task
+    ``importlib.invalidate_caches()`` re-reads every zip directory on
+    ``sys.path``) and the top-k window's second job. The driver decodes
+    serially what the distributed plan spreads over ``defaultParallelism``
+    slots, so the share shrinks as slots are added: the measured point where
+    the driver stops winning fell roughly in proportion to the slot count
+    (ARCHITECTURE.md).
 
     Larger requests run distributed. Matched posting blocks shuffle ONCE to
     their doc-shard group — never per query — because shards hold disjoint
@@ -475,14 +464,12 @@ def bm25_search_pruned(index: BM25Index, queries, k: int = 10) -> DataFrame:
     idf_by_term = {t: idf for t, (idf, _df) in stats.items()}
     k1, b, avgdl = index.k1, index.b, (index.avgdl or 1.0)
 
-    # placement (see docstring): the whole request fits one shard task
-    if sum(stats[t][1] for _, t, _ in qt_rows if t in stats) <= DECODE_CACHE_MAX_POSTINGS:
-        # Arrow batches straight from the JVM: toPandas() would add a py4j
-        # round trip per SQL conf it consults, a fixed cost at this size
-        batches = index.postings.filter(isin_col("term", list(stats)))._collect_as_arrow()
-        if not batches:
+    # placement (see docstring): one slot's share of a shard task's budget
+    n_postings = sum(stats[t][1] for _, t, _ in qt_rows if t in stats)
+    if n_postings * spark.sparkContext.defaultParallelism <= DECODE_CACHE_MAX_POSTINGS:
+        pdf = index.postings.filter(isin_col("term", list(stats))).toPandas()
+        if pdf.empty:
             return _empty_result(spark)
-        pdf = pa.Table.from_batches(batches).to_pandas()
         out = _search_shard(pdf, per_query, idf_by_term, k, k1, b, avgdl)
         rank = out.groupby("qid", sort=False).cumcount() + 1
         return local_rows_df(

@@ -201,7 +201,7 @@ def test_isin_col_pushes_down_and_matches_isin(spark, saved_index, tmp_path):
     assert got == sorted(odd[:5])
 
 
-def test_filter_unpushed_stays_above_projection_and_keeps_rows(spark):
+def test_filter_unpushed_stays_above_join_and_keeps_rows(spark):
     """filter_unpushed keeps a predicate on a column computed over a join
     above that join, where a plain filter is pushed into the join condition
     with the defining expression substituted; its always-false term
